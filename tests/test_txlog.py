@@ -1965,3 +1965,96 @@ def test_clean_log_reaps_stale_sidecar_with_live_owner(spark, ds, tmp_path):
     assert stale in removed
     # table unharmed
     assert ds.read(ref).count() == CHECKPOINT_INTERVAL + 1
+
+
+# -- log format: what every writer emits ------------------------------------
+def test_every_writer_emits_current_log_format(spark, ds, tmp_path,
+                                               monkeypatch):
+    """Drive a CDF + deletion-vector table through every writer and
+    pin the log shapes the reader relies on: ICT on every commit,
+    numRecords + size on every add (inline, batched, checkpointed),
+    the full typed layout on every adds sidecar, every replay-carried
+    key on every checkpoint, partitionValues on every cdc action."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    import x_spark.sources.txlog as tx
+    from x_spark.sources.txlog import CDF_ENABLE_KEY, DV_ENABLE_KEY
+
+    monkeypatch.setattr(tx, "CHECKPOINT_INTERVAL", 4)
+    monkeypatch.setattr(tx, "CHECKPOINT_PARQUET_MIN", 2)
+    monkeypatch.setattr(tx, "COMMIT_PARQUET_MIN", 2)
+    schema = "pk int, part string, v int"
+
+    def rows(lo, hi, v=0):  # one file per partition: DV masks stay partial
+        return spark.createDataFrame(
+            [(i, f"p{i % 2}", i + v) for i in range(lo, hi)], schema
+        ).coalesce(1)
+
+    ref = _ref(tmp_path)
+    ds.create(ref, T._parse_datatype_string(schema), partition_by=["part"])
+    ds.append(rows(0, 10), ref)
+    ds.set_properties(ref, {CDF_ENABLE_KEY: "true"})  # DDL commit
+    ds.append(rows(10, 20), ref)
+    ds.overwrite(rows(0, 20), ref)
+    ds.overwrite_dynamic(rows(0, 10, v=1), ref)
+    upsert = MergeSpec(["pk"], ["v"], insert_when_not_matched=True)
+    for dv in ("false", "true"):  # copy-on-write, then deletion vectors
+        ds.set_properties(ref, {DV_ENABLE_KEY: dv})
+        ds.merge(rows(15, 25, v=2), ref, upsert)
+        ds.update(ref, {"v": "v + 1"}, "pk < 3")
+        ds.delete(ref, "pk = 5")
+    restore_to = resolve_snapshot(ref.path).version
+    ds.optimize(ref)
+    ds.cluster(ref, ["pk"])
+    ds.restore(ref, restore_to)
+    src = str(tmp_path / "landing")
+    rows(100, 110).repartition(2).write.parquet(src)
+    ds.copy_into(ref, src)
+    clone = _ref(tmp_path, "clone")
+    ds.clone(ref, clone)
+    ds.truncate(ref)
+    conv = str(tmp_path / "conv")
+    rows(0, 10).repartition(2).write.parquet(conv)
+    ds.convert(TableRef(path=conv))
+
+    seen = {"addBatch": 0, "ck_sidecar": 0, "cdc": 0, "dv": 0}
+    add_keys = {"numRecords", "size"}
+    side_cols = {"path", "size", "num_records", "dv_json", "clustered_by",
+                 "add_json"}
+
+    def check_sidecar(path):
+        t = pq.read_table(path)
+        assert side_cols <= set(t.column_names), path
+        for s in t.column("add_json").to_pylist():
+            assert add_keys <= set(json.loads(s)), path
+        seen["dv"] += sum(1 for s in t.column("dv_json").to_pylist() if s)
+
+    for table in (ref.path, clone.path, conv):
+        log = os.path.join(table, "_txlog")
+        commits, checkpoints = _list_log(table)
+        for fname in commits:
+            with open(os.path.join(log, fname)) as fh:
+                actions = [json.loads(line) for line in fh]
+            infos = [a["commitInfo"] for a in actions if "commitInfo" in a]
+            assert len(infos) == 1 and type(infos[0]["timestamp"]) is int
+            for a in actions:
+                if "add" in a:
+                    assert add_keys <= set(a["add"]), (fname, a)
+                    seen["dv"] += bool(a["add"].get("dv"))
+                elif "addBatch" in a:
+                    seen["addBatch"] += 1
+                    check_sidecar(os.path.join(log, a["addBatch"]["parquet"]))
+                elif "cdc" in a:
+                    seen["cdc"] += 1
+                    assert "part" in a["cdc"]["partitionValues"], (fname, a)
+        for fname in checkpoints:
+            with open(os.path.join(log, fname)) as fh:
+                ck = json.load(fh)
+            assert {"txns", "copyLedgers", "rowIdHighWaterMark"} <= set(ck)
+            for a in ck.get("adds", []):
+                assert add_keys <= set(a), (fname, a)
+            if "addsParquet" in ck:
+                seen["ck_sidecar"] += 1
+                check_sidecar(os.path.join(log, ck["addsParquet"]))
+    assert all(seen.values()), f"a log shape was never exercised: {seen}"

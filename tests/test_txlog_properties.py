@@ -118,8 +118,7 @@ def test_txlog_matches_model_over_random_op_sequences(spark, tmp_path_factory, o
 
 def test_timestamp_travel_resolves_like_delta(spark, tmp_path):
     """Timestamp travel resolves by the IN-COMMIT timestamp (Delta
-    ICT): mtime scrambling cannot move commit times; legacy commits
-    without an ICT fall back to mtime."""
+    ICT): mtime scrambling cannot move commit times."""
     import json
     import os
     import time
@@ -141,12 +140,9 @@ def test_timestamp_travel_resolves_like_delta(spark, tmp_path):
             for line in open(path):
                 a = json.loads(line)
                 if "commitInfo" in a:
-                    if epoch_of is None:
-                        a["commitInfo"].pop("timestamp", None)  # pre-ICT
-                    else:
-                        a["commitInfo"]["timestamp"] = int(
-                            epoch_of(v) * 1000
-                        )
+                    a["commitInfo"]["timestamp"] = int(
+                        epoch_of(v) * 1000
+                    )
                 lines.append(json.dumps(a) + "\n")
             open(path, "w").write("".join(lines))
 
@@ -163,14 +159,6 @@ def test_timestamp_travel_resolves_like_delta(spark, tmp_path):
 
     with pytest.raises(DataSourceException, match="no commit"):
         ds.read(at(base - 1))
-
-    # pre-ICT table (no in-commit timestamps): mtime fallback rules
-    set_ict(None)
-    for fname in sorted(os.listdir(log)):
-        v = int(fname.split(".")[0])
-        os.utime(os.path.join(log, fname), (base + 100 * v,) * 2)
-    assert ds.read(at(base + 150)).count() == 1
-    assert ds.read(at(base + 250)).count() == 2
 
     # new commits stamp a MONOTONE ICT and history() surfaces it
     ds.append(spark.createDataFrame([(3, 30)], "pk int, v int"), ref)

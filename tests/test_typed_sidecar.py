@@ -14,6 +14,7 @@ millions of files never deserializes an add action.
 
 import json
 import os
+import shutil
 from datetime import date
 from decimal import Decimal
 
@@ -49,26 +50,40 @@ def _mk_rows(lo, hi, part="a"):
     ]
 
 
-def _sidecar_table(spark, ds, tmp_path, monkeypatch, n_batches=3):
+@pytest.fixture(scope="module")
+def sidecar_base(spark, tmp_path_factory):
     """A table whose latest checkpoint is a TYPED sidecar: lowered
     sidecar threshold, CHECKPOINT_INTERVAL appends of disjoint pk
-    ranges (one file each), plus tail commits past the checkpoint."""
+    ranges (one file each), plus tail commits past the checkpoint.
+    Built once per module; each test gets a private copy
+    (``sidecar_ref``)."""
+    ds = init_datasource("txlog", spark)
+    ref = TableRef(path=str(tmp_path_factory.mktemp("sidecar") / "t"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tx, "CHECKPOINT_PARQUET_MIN", 2)
+        ds.create(ref, T._parse_datatype_string(SCHEMA),
+                  partition_by=["part"])
+        for b in range(CHECKPOINT_INTERVAL + 2):  # 2 tail commits
+            ds.append(
+                spark.createDataFrame(
+                    _mk_rows(b * 10, b * 10 + 5, part=f"p{b % 3}"), SCHEMA
+                ).coalesce(1),
+                ref,
+            )
+    return ref.path
+
+
+@pytest.fixture()
+def sidecar_ref(sidecar_base, tmp_path, monkeypatch):
+    """A private copy of the sidecar table (log paths are relative),
+    with the sidecar threshold lowered as when it was built."""
     monkeypatch.setattr(tx, "CHECKPOINT_PARQUET_MIN", 2)
-    ref = TableRef(path=str(tmp_path / "t"))
-    ds.create(ref, T._parse_datatype_string(SCHEMA),
-              partition_by=["part"])
-    for b in range(CHECKPOINT_INTERVAL + 2):  # 2 tail commits
-        ds.append(
-            spark.createDataFrame(
-                _mk_rows(b * 10, b * 10 + 5, part=f"p{b % 3}"), SCHEMA
-            ).coalesce(1),
-            ref,
-        )
-    return ref
+    shutil.copytree(sidecar_base, tmp_path / "t")
+    return TableRef(path=str(tmp_path / "t"))
 
 
-def test_typed_sidecar_columns_written(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_sidecar_columns_written(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     log = os.path.join(ref.path, "_txlog")
     _, checkpoints = _list_log(ref.path)
     with open(os.path.join(log, checkpoints[-1])) as fh:
@@ -96,9 +111,8 @@ def test_typed_sidecar_columns_written(spark, ds, tmp_path, monkeypatch):
             assert r["min::price"] == str(mins["price"])
 
 
-def test_snapshot_is_lazy_and_mapping_complete(spark, ds, tmp_path,
-                                               monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_snapshot_is_lazy_and_mapping_complete(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     snap = resolve_snapshot(ref.path)
     files = snap.files
     assert isinstance(files, LazyAdds)
@@ -116,12 +130,12 @@ def test_snapshot_is_lazy_and_mapping_complete(spark, ds, tmp_path,
     assert set(dict(files)) == set(files)
 
 
-def test_zero_candidate_delete_never_parses_adds(spark, ds, tmp_path,
-                                                 monkeypatch):
+def test_zero_candidate_delete_never_parses_adds(spark, ds, monkeypatch,
+                                                 sidecar_ref):
     """The scale win, pinned: a DELETE whose predicate prunes to zero
     candidates completes without deserializing a single add action —
     candidate selection ran entirely on the typed sidecar columns."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
 
     def boom(self):
         raise AssertionError("add dicts materialized on a "
@@ -134,11 +148,11 @@ def test_zero_candidate_delete_never_parses_adds(spark, ds, tmp_path,
     assert ds.read(ref).count() == before
 
 
-def test_pruning_reads_are_column_pruned(spark, ds, tmp_path,
-                                         monkeypatch):
+def test_pruning_reads_are_column_pruned(spark, ds, monkeypatch,
+                                         sidecar_ref):
     """Candidate selection reads the SIDECAR, not the JSON log, and
     only the columns the predicate needs — never add_json."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     snap = resolve_snapshot(ref.path)
     import pyarrow.parquet as pq
 
@@ -160,12 +174,13 @@ def test_pruning_reads_are_column_pruned(spark, ds, tmp_path,
     assert len(got) == 1  # pk=3 lives in exactly the first file
 
 
-def _dict_twin(snap):
-    """The same snapshot with a plain-dict live set — the fallback
-    metadata path — for typed-vs-dict equivalence checks."""
+def _dict_twin(ref, snap):
+    """The same snapshot with its live set as one delta layer of add
+    dicts — the per-add extraction plane — for typed-column vs
+    dict-extraction equivalence checks."""
     return Snapshot(snap.version, snap.schema_json, snap.partition_cols,
-                    dict(snap.files), snap.configuration,
-                    row_id_high=snap.row_id_high)
+                    LazyAdds(ref.path, [("delta", dict(snap.files))]),
+                    snap.configuration, row_id_high=snap.row_id_high)
 
 
 PREDICATES = [
@@ -188,21 +203,20 @@ PREDICATES = [
 ]
 
 
-def test_typed_and_dict_pruning_agree(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_and_dict_pruning_agree(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref, lazy)
     for pred in PREDICATES:
         a = ds._files_matching_predicate(ref.path, lazy, pred)
         b = ds._files_matching_predicate(ref.path, twin, pred)
         assert a == b, f"typed/dict divergence for {pred!r}"
 
 
-def test_typed_and_dict_key_overlap_agree(spark, ds, tmp_path,
-                                          monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_typed_and_dict_key_overlap_agree(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref, lazy)
     sources = {
         "pk": spark.createDataFrame([(3,), (47,)], "pk int"),
         "name": spark.createDataFrame([("n0003",)], "name string"),
@@ -220,11 +234,10 @@ def test_typed_and_dict_key_overlap_agree(spark, ds, tmp_path,
     assert len(ds._files_overlapping_keys(sources["pk"], lazy, "pk")) == 5
 
 
-def test_delete_correct_through_typed_plane(spark, ds, tmp_path,
-                                            monkeypatch):
+def test_delete_correct_through_typed_plane(spark, ds, sidecar_ref):
     """End-to-end: a point DELETE on a sidecar-backed table rewrites
     only the one candidate file and removes exactly the row."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     before = {p: a for p, a in resolve_snapshot(ref.path).files.items()}
     n0 = ds.read(ref).count()
     ds.delete(ref, "pk = 3")
@@ -235,41 +248,44 @@ def test_delete_correct_through_typed_plane(spark, ds, tmp_path,
     assert len(before) - len(untouched) == 1  # one file rewritten
 
 
-def test_pre_typed_sidecar_still_resolves_and_upgrades(
-        spark, ds, tmp_path, monkeypatch):
-    """A sidecar from the pre-typed layout (add_json only) still
-    resolves — and clean_log's floor refresh upgrades it in place."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_pre_typed_sidecar_still_resolves_and_upgrades(spark, ds,
+                                                       sidecar_ref):
+    """clean_log never rewrites its floor: the typed floor checkpoint
+    and its adds sidecar keep their bytes and mtime (every writer
+    already emits the typed layout and the carried keys — see
+    tests/test_txlog.py::test_every_writer_emits_current_log_format),
+    and the table still reads whole."""
+    ref = sidecar_ref
     log = os.path.join(ref.path, "_txlog")
     _, checkpoints = _list_log(ref.path)
-    with open(os.path.join(log, checkpoints[-1])) as fh:
-        ck = json.load(fh)
-    side = os.path.join(log, ck["addsParquet"])
-    import pyarrow as pa
+    floor = os.path.join(log, checkpoints[-1])
+    with open(floor) as fh:
+        side = os.path.join(log, json.load(fh)["addsParquet"])
     import pyarrow.parquet as pq
 
-    old = pa.table({
-        "add_json": pq.read_table(side, columns=["add_json"])
-        .column("add_json")
-    })
-    pq.write_table(old, side)  # regress to the pre-typed layout
-    n = CHECKPOINT_INTERVAL + 2
-    assert ds.read(ref).count() == n * 5  # resolution still whole
-    snap = resolve_snapshot(ref.path)
-    assert ds._files_matching_predicate(
-        ref.path, snap, "pk = 3"
-    ) == ds._files_matching_predicate(ref.path, _dict_twin(snap), "pk = 3")
-    # keep_last must leave the v20 checkpoint usable as the floor
-    ds.clean_log(ref, keep_last=1, min_age_sec=0.0)
     names = set(pq.ParquetFile(side).schema_arrow.names)
-    assert "path" in names and "min::pk" in names  # upgraded in place
+    assert "path" in names and "min::pk" in names  # typed layout
+
+    def state():
+        out = {}
+        for p in (floor, side):
+            with open(p, "rb") as fh:
+                out[p] = (fh.read(), os.stat(p).st_mtime_ns)
+        return out
+
+    before = state()
+    # keep_last must leave the v20 checkpoint usable as the floor
+    removed = ds.clean_log(ref, keep_last=1, min_age_sec=0.0)
+    assert removed, "commits below the floor were not pruned"
+    assert state() == before
+    n = CHECKPOINT_INTERVAL + 2
     assert ds.read(ref).count() == n * 5
 
 
-def test_tail_overrides_fold_into_meta(spark, ds, tmp_path, monkeypatch):
+def test_tail_overrides_fold_into_meta(spark, ds, sidecar_ref):
     """Post-checkpoint commits (adds AND removes) are visible through
     the columnar metadata plane without a new checkpoint."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     # tail add: a fresh pk range far outside every sidecar file
     ds.append(
         spark.createDataFrame(_mk_rows(900, 905, part="p9"), SCHEMA)
@@ -287,9 +303,8 @@ def test_tail_overrides_fold_into_meta(spark, ds, tmp_path, monkeypatch):
     assert ds._files_matching_predicate(ref.path, snap2, "pk = 901") == []
 
 
-def test_partition_values_prune_from_typed_columns(spark, ds, tmp_path,
-                                                   monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_partition_values_prune_from_typed_columns(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     snap = resolve_snapshot(ref.path)
     got = ds._files_matching_predicate(ref.path, snap, "part = 'p1'")
     pvs = {
@@ -304,11 +319,10 @@ def test_partition_values_prune_from_typed_columns(spark, ds, tmp_path,
     assert len(got) == n_p1
 
 
-def test_replace_where_overwrite_on_sidecar_table(spark, ds, tmp_path,
-                                                  monkeypatch):
+def test_replace_where_overwrite_on_sidecar_table(spark, ds, sidecar_ref):
     """The reference's flagship overwrite shape (partition-scoped
     replaceWhere, etl/overwrite.py:27-33) through the typed plane."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     n0 = ds.read(ref).count()
     other = ds.read(ref).filter("part <> 'p1'").count()
     repl = spark.createDataFrame(_mk_rows(5000, 5003, part="p1"), SCHEMA)
@@ -327,11 +341,11 @@ def _cands(ds, ref, pred):
     return ds._files_matching_predicate(ref.path, snap, pred)
 
 
-def test_or_pruning_point_disjuncts(spark, ds, tmp_path, monkeypatch):
+def test_or_pruning_point_disjuncts(spark, ds, sidecar_ref):
     """The reference's own generated replaceWhere shape — OR of
     per-partition-tuple equalities (etl/overwrite.py:27-33) — prunes:
     a file is excluded when EVERY disjunct is provably false."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     got = _cands(ds, ref, "pk = 3 OR pk = 47")
     # pk=3 -> file [0,4]; pk=47 falls in no file's [min,max]
     assert len(got) == 1
@@ -341,8 +355,8 @@ def test_or_pruning_point_disjuncts(spark, ds, tmp_path, monkeypatch):
     assert len(got) == 1
 
 
-def test_or_pruning_mixed_and_or_nesting(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_or_pruning_mixed_and_or_nesting(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     got = _cands(
         ds, ref,
         "(pk < 5 AND name = 'n0001') OR (pk >= 100 AND pk < 105)",
@@ -356,11 +370,10 @@ def test_or_pruning_mixed_and_or_nesting(spark, ds, tmp_path, monkeypatch):
     assert len(got) == 4  # [0,4], [10,14] + the two name-range files
 
 
-def test_or_pruning_unparsable_branch_disables(spark, ds, tmp_path,
-                                               monkeypatch):
+def test_or_pruning_unparsable_branch_disables(spark, ds, sidecar_ref):
     """A disjunct stats cannot falsify (IS NULL, functions, NULL
     literals) poisons the whole OR — every file stays a candidate."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     snap = resolve_snapshot(ref.path)
     n = len(snap.files)
     assert len(_cands(ds, ref, "pk = 3 OR pk IS NULL")) == n
@@ -375,10 +388,10 @@ def test_or_pruning_unparsable_branch_disables(spark, ds, tmp_path,
     assert pvs == {"p0", "p1"}
 
 
-def test_or_pruning_delete_end_to_end(spark, ds, tmp_path, monkeypatch):
+def test_or_pruning_delete_end_to_end(spark, ds, sidecar_ref):
     """Correctness under the new skipping: OR-predicate DELETE removes
     exactly the matching rows and rewrites only candidate files."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     before = ds.read(ref).collect()
     expect_gone = {r.pk for r in before if r.pk < 5 or r.pk >= 200}
     files_before = set(resolve_snapshot(ref.path).files)
@@ -390,10 +403,10 @@ def test_or_pruning_delete_end_to_end(spark, ds, tmp_path, monkeypatch):
     assert len(files_before - files_after) == 3
 
 
-def test_or_pruning_typed_and_dict_agree(spark, ds, tmp_path, monkeypatch):
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+def test_or_pruning_typed_and_dict_agree(spark, ds, sidecar_ref):
+    ref = sidecar_ref
     lazy = resolve_snapshot(ref.path)
-    twin = _dict_twin(lazy)
+    twin = _dict_twin(ref, lazy)
     for pred in [
         "pk = 3 OR pk = 47",
         "(pk < 5 AND name = 'n0001') OR (pk >= 100 AND pk < 105)",
@@ -427,12 +440,12 @@ def test_partition_only_predicate_precheck():
 
 
 def test_non_partition_predicate_skips_jvm_partition_eval(
-        spark, ds, tmp_path, monkeypatch):
+        spark, ds, monkeypatch, sidecar_ref):
     """A predicate over non-partition columns must take the no-pruning
     path WITHOUT evaluating against a partition-tuple frame (pre-fix
     that evaluation failed analysis and logged an ERROR stack trace
     per occurrence)."""
-    ref = _sidecar_table(spark, ds, tmp_path, monkeypatch)
+    ref = sidecar_ref
     snap = resolve_snapshot(ref.path)
     stats_only = ds._files_matching_predicate(ref.path, snap, "pk = 3")
 

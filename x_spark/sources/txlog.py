@@ -154,9 +154,10 @@ def _fresh_physical() -> str:
 
 
 def _commit_timestamp_ms(path: str) -> int | None:
-    """The in-commit timestamp (epoch ms) of a commit file, None for
-    pre-ICT commits. The commitInfo action is written LAST, so the
-    scan reads the tail line first."""
+    """The in-commit timestamp (epoch ms) of a commit file, None while
+    its commitInfo line is not readable yet (a commit still being
+    written, or pruned since listing). The commitInfo action is
+    written LAST, so the scan reads the tail line first."""
     try:
         with open(path) as fh:
             lines = fh.readlines()
@@ -246,10 +247,10 @@ class Snapshot:
     """Resolved table state at one version: schema, partitioning,
     table configuration (constraints live under ``constraint.<name>``
     keys, Delta's convention), and the live file set (relative path ->
-    add-action dict)."""
+    add-action dict, always a :class:`LazyAdds`)."""
 
     def __init__(self, version: int, schema_json: str, partition_cols: list[str],
-                 files: dict[str, dict],
+                 files: "LazyAdds",
                  configuration: dict[str, str] | None = None,
                  row_id_high: int = -1):
         self.version = version
@@ -578,15 +579,16 @@ def _refresh_typed_sidecar(lazy: "LazyAdds", schema,
                            partition_cols: list[str],
                            dest: str) -> int:
     """Write the NEXT checkpoint's adds sidecar by COLUMNAR refresh of
-    a typed layered live set: previous sidecar(s) filter out rows
+    a layered live set: previous sidecar(s) filter out rows
     superseded by later layers (arrow is_in mask — no JSON touched),
-    only the tail's small-commit delta adds serialize fresh, and the
-    result concatenates + sorts arrow-side. The every-20th-commit
-    checkpoint on a million-file table therefore costs O(tail changes
-    + columnar copy), never O(live set) driver-side json.loads —
-    the incremental-checkpoint idea applied to stats_parsed. Returns
-    the row count written; output is row-equivalent to the from-dicts
-    builder (parity-pinned by tests/test_commit_batch.py)."""
+    only the delta layers' adds serialize fresh, and the result
+    concatenates + sorts arrow-side. The every-20th-commit checkpoint
+    on a million-file table therefore costs O(tail changes + columnar
+    copy), never O(live set) driver-side json.loads — the
+    incremental-checkpoint idea applied to stats_parsed. A delta-only
+    stack (the first sidecar checkpoint) serializes every add. Returns
+    the row count written; the ``add_json`` column is the replayed
+    truth row-for-row (parity-pinned by tests/test_commit_batch.py)."""
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
     import pyarrow.parquet as pq  # noqa: PLC0415
@@ -771,8 +773,8 @@ def _partition_only_predicate(predicate: str,
 
 
 class LazyAdds(Mapping):
-    """The live file set of a sidecar-backed snapshot, JSON-parse
-    deferred. Three access tiers, each touching only what it needs:
+    """The live file set of every snapshot, JSON-parse deferred. Three
+    access tiers, each touching only what it needs:
 
     - iteration / ``len`` / ``in`` read the sidecars' ``path`` column
       (no JSON);
@@ -791,20 +793,19 @@ class LazyAdds(Mapping):
     analogue applied to the tail, so a 100k-file write replays as a
     columnar scan, never 100k driver-side json.loads) — and
     ``("delta", {path: add|None})`` — small-commit adds/removes in
-    replay order. The tail is bounded by CHECKPOINT_INTERVAL commits,
-    so the merge is O(tail sidecars + small-commit actions), never
-    O(live set). A pre-typed sidecar (no ``path`` column) degrades
-    every lazy tier to the materialized one transparently.
+    replay order. An inline checkpoint is a delta layer too, so a
+    small table is a delta-only stack. The tail is bounded by
+    CHECKPOINT_INTERVAL commits, so the merge is O(tail sidecars +
+    small-commit actions), never O(live set).
 
-    SNAPSHOT LIFETIME: unlike the old eager parse, a resolved snapshot
-    is backed by the sidecar FILEs on disk, so it stays valid only
-    while those files exist. clean_log's floor refresh may supersede a
-    sidecar, but the superseded file is reaped strictly age-guarded
-    (``_reap_log_orphans``: only past ``min_age_sec``, default 600 s) —
-    a snapshot is therefore safe for any read shorter than the vacuum
-    retention window, the same contract Delta gives data files. Hold a
-    snapshot longer than ``min_age_sec`` across a concurrent
-    ``clean_log`` and ``_read`` fails loudly (never silently changes).
+    SNAPSHOT LIFETIME: a resolved snapshot is backed by the sidecar
+    FILEs on disk, so it stays valid only while those files exist.
+    Sidecars are immutable once published, and clean_log reaps one
+    only after pruning its owner below the replay floor, strictly
+    age-guarded (``_reap_log_orphans``: only past ``min_age_sec``,
+    default 600 s) — the same contract Delta gives data files. Hold a
+    snapshot of a since-pruned version across such a ``clean_log`` and
+    ``_read`` fails loudly (never silently changes).
     """
 
     def __init__(self, table: str,
@@ -839,9 +840,9 @@ class LazyAdds(Mapping):
 
     def sidecar_columns(self) -> set[str]:
         """Column names present in EVERY sidecar layer (footer-only
-        reads) — the intersection, so a column one layer predates
-        falls back to the materialized tier rather than serving
-        part-missing values."""
+        reads) — the intersection, so a stat column one layer predates
+        (an ADD COLUMN after it was written) never serves part-missing
+        values."""
         if self._cols is None:
             import pyarrow.parquet as pq  # noqa: PLC0415
 
@@ -861,9 +862,6 @@ class LazyAdds(Mapping):
                 cols = names if cols is None else (cols & names)
             self._cols = cols or set()
         return self._cols
-
-    def typed(self) -> bool:
-        return "path" in self.sidecar_columns()
 
     # -- layered merge core ---------------------------------------------
     def _fold(self, sidecar_cols: list[str], sidecar_row, delta_val):
@@ -888,15 +886,9 @@ class LazyAdds(Mapping):
 
     # -- Mapping protocol ----------------------------------------------
     def _ensure_live(self) -> None:
-        if self._live is not None:
-            return
-        if self.typed():
-            alive = self._fold([], lambda: True, lambda a: True)
-            live = list(alive)
-        else:  # pre-typed sidecar: add_json is the only path source
-            live = list(self._materialize())
-        self._live = live
-        self._live_set = frozenset(live)
+        if self._live is None:
+            self._live = list(self._fold([], lambda: True, lambda a: True))
+            self._live_set = frozenset(self._live)
 
     def __iter__(self):
         self._ensure_live()
@@ -913,31 +905,9 @@ class LazyAdds(Mapping):
     def _materialize(self) -> dict[str, dict]:
         """The fully-parsed add dicts (bulk ``add_json`` read +
         json.loads per sidecar layer, in layer order). Cached: paid
-        once, only by flows that truly need every dict. Pre-typed
-        sidecars have no ``path`` column — the parsed dict supplies
-        the key instead."""
+        once, only by flows that truly need every dict."""
         if self._full is None:
-            if self.typed():
-                self._full = self._fold(
-                    ["add_json"], lambda s: json.loads(s), lambda a: a
-                )
-            else:
-                out: dict[str, dict] = {}
-                for kind, payload in self._layers:
-                    if kind == "sidecar":
-                        col = self._read_one(
-                            payload, ["add_json"]
-                        ).column("add_json")
-                        for s in col.to_pylist():
-                            a = json.loads(s)
-                            out[a["path"]] = a
-                    else:
-                        for p, a in payload.items():
-                            if a is None:
-                                out.pop(p, None)
-                            else:
-                                out[p] = a
-                self._full = out
+            self._full = self._fold(["add_json"], json.loads, lambda a: a)
         return self._full
 
     def __getitem__(self, key):
@@ -948,12 +918,7 @@ class LazyAdds(Mapping):
                   decode: bool = False) -> dict[str, object]:
         """path -> one per-file metadata value for the live set, from
         a typed sidecar column (delta-layer adds extracted from their
-        dicts). A column any sidecar predates falls back to the
-        materialized dicts — correct, just unlazy."""
-        if col not in self.sidecar_columns():
-            return {
-                p: a.get(field) for p, a in self._materialize().items()
-            }
+        dicts)."""
         return self._fold(
             [col],
             (lambda v: json.loads(v) if v else None) if decode
@@ -1021,55 +986,6 @@ class LazyAdds(Mapping):
         return paths, stats, pvs
 
 
-def _files_meta(snap, stat_kinds: dict[str, str], pv_phys: list[str],
-                ) -> tuple[list[str], dict[str, tuple[list, list]],
-                           dict[str, list]]:
-    """``(paths, {phys: (mins, maxs)}, {phys: pv_values})`` for a
-    snapshot's live set — from the typed sidecar when available
-    (column-pruned parquet read, no add-action deserialization), else
-    extracted from the materialized add dicts (small tables and
-    pre-typed sidecars, where the dict already exists or is cheap)."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.meta(stat_kinds, pv_phys)
-    paths = sorted(files)
-
-    def stat(p: str, key: str, c: str, k: str):
-        return _typed_stat(
-            k, ((files[p].get("stats") or {}).get(key) or {}).get(c)
-        )
-
-    stats = {
-        c: ([stat(p, "minValues", c, k) for p in paths],
-            [stat(p, "maxValues", c, k) for p in paths])
-        for c, k in stat_kinds.items()
-    }
-    pvs = {
-        c: [(files[p].get("partitionValues") or {}).get(c) for p in paths]
-        for c in pv_phys
-    }
-    return paths, stats, pvs
-
-
-def _files_dv(snap) -> Mapping[str, dict | None]:
-    """path -> dv dict (or None) for the live set — typed-column read
-    on sidecar-backed snapshots, dict extraction otherwise."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.dv_map()
-    return {p: a.get("dv") for p, a in files.items()}
-
-
-def _files_field(snap, col: str, field: str,
-                 decode: bool = False) -> dict[str, object]:
-    """path -> one per-file add field for the live set — typed-column
-    read on sidecar-backed snapshots, dict extraction otherwise."""
-    files = snap.files
-    if isinstance(files, LazyAdds) and files.typed():
-        return files.field_map(col, field, decode=decode)
-    return {p: a.get(field) for p, a in files.items()}
-
-
 def _np_bounds(vals: list, kind: str):
     """(numpy array with null sentinel, validity mask) for a bounds
     column — int64/float64 for the numeric kinds (int stays int64:
@@ -1131,8 +1047,7 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
     row_id_high = -1
     start = 0
     # ordered layer stack (see LazyAdds): ("sidecar", parquet path) |
-    # ("delta", {path: add|None}); stays a plain eager dict unless a
-    # sidecar layer appears anywhere
+    # ("delta", {path: add|None})
     layers: list[tuple[str, object]] = []
     usable = [c for c in checkpoints if _version_of(c) <= target]
     if usable:
@@ -1140,7 +1055,7 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
             ck = json.load(fh)
         schema_json = ck["schemaJson"]
         part_cols = ck["partitionColumns"]
-        configuration = dict(ck.get("configuration", {}))
+        configuration = dict(ck["configuration"])
         if "addsParquet" in ck:
             # sidecar-backed: defer the per-add json.loads — at
             # millions of live files that parse IS the snapshot-
@@ -1152,7 +1067,7 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
             layers.append(
                 ("delta", {a["path"]: a for a in ck["adds"]})
             )
-        row_id_high = int(ck.get("rowIdHighWaterMark", -1))
+        row_id_high = int(ck["rowIdHighWaterMark"])
         start = _version_of(usable[-1]) + 1
 
     def delta() -> dict:
@@ -1190,18 +1105,8 @@ def resolve_snapshot(table: str, version: int | None = None) -> Snapshot | None:
                     )
     if schema_json is None:
         raise DataSourceException(f"txlog table {table!r} has no metaData action")
-    if any(kind == "sidecar" for kind, _ in layers):
-        live: Mapping = LazyAdds(table, layers)
-    else:
-        files: dict[str, dict] = {}
-        for _, d in layers:
-            for p, a in d.items():  # type: ignore[union-attr]
-                if a is None:
-                    files.pop(p, None)
-                else:
-                    files[p] = a
-        live = files
-    return Snapshot(target, schema_json, part_cols, live, configuration,
+    return Snapshot(target, schema_json, part_cols,
+                    LazyAdds(table, layers), configuration,
                     row_id_high=row_id_high)
 
 
@@ -1425,7 +1330,7 @@ class TxLogDataSource(BaseDataSource):
             )
         pmap = _physical_map(snap.schema)
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        _, _, pvs = _files_meta(snap, {}, pv_phys)
+        _, _, pvs = snap.files.meta({}, pv_phys)
         n = len(next(iter(pvs.values()))) if pvs else 0
         rows = sorted(
             {tuple(pvs[p][i] for p in pv_phys) for i in range(n)},
@@ -1460,8 +1365,8 @@ class TxLogDataSource(BaseDataSource):
             )
         pmap = _physical_map(snap.schema)
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        paths, _, pvs = _files_meta(snap, {}, pv_phys)
-        nrec = _files_field(snap, "num_records", "numRecords")
+        paths, _, pvs = snap.files.meta({}, pv_phys)
+        nrec = snap.files.field_map("num_records", "numRecords")
         agg: dict[tuple, list[int]] = {}
         for i, p in enumerate(paths):
             key = tuple(pvs[c][i] for c in pv_phys)
@@ -2268,8 +2173,8 @@ class TxLogDataSource(BaseDataSource):
     def read(self, ref: TableRef) -> DataFrame:
         """Snapshot read. Time travel via ``ref.options``:
         ``versionAsOf`` (exact version) or ``timestampAsOf`` (latest
-        version whose commit file mtime is <= the given ISO timestamp /
-        epoch seconds, Delta's resolution rule)."""
+        version whose in-commit timestamp is <= the given ISO
+        timestamp / epoch seconds, Delta's resolution rule)."""
         table = self._table_path(ref)
         version = ref.options.get("versionAsOf")
         if version is None and "timestampAsOf" in ref.options:
@@ -2285,9 +2190,8 @@ class TxLogDataSource(BaseDataSource):
     def _version_at_timestamp(table: str, ts) -> int:
         """Latest committed version at or before ``ts`` (ISO-8601
         string or epoch seconds). Commit time is the IN-COMMIT
-        timestamp when the commit carries one (monotone by
-        construction, survives file copies/restores-from-backup);
-        the log file's mtime is the fallback for pre-ICT commits."""
+        timestamp every commit carries (monotone by construction,
+        survives file copies/restores-from-backup)."""
         import datetime
 
         if isinstance(ts, (int, float)):
@@ -2297,11 +2201,9 @@ class TxLogDataSource(BaseDataSource):
         commits, _ = _list_log(table)
         best = None
         for fname in commits:
-            full = os.path.join(_log_path(table), fname)
-            ict = _commit_timestamp_ms(full)
-            ctime = ict / 1000.0 if ict is not None \
-                else os.path.getmtime(full)
-            if ctime <= epoch:
+            ict = _commit_timestamp_ms(
+                os.path.join(_log_path(table), fname))
+            if ict is not None and ict / 1000.0 <= epoch:
                 best = _version_of(fname)
         if best is None:
             raise DataSourceException(
@@ -2322,7 +2224,7 @@ class TxLogDataSource(BaseDataSource):
         if not rel:
             return self.spark.createDataFrame([], snap.schema)
         cols = [f.name for f in snap.schema.fields]
-        dvs = _files_dv(snap)
+        dvs = snap.files.dv_map()
         masked = [p for p in rel if dvs.get(p)]
         plain = [p for p in rel if not dvs.get(p)]
         parts: list[DataFrame] = []
@@ -2369,7 +2271,7 @@ class TxLogDataSource(BaseDataSource):
                  rels: list[str]) -> DataFrame:
         """Mask rows (``__fn``, ``__ri``) for live files of a snapshot
         (see :meth:`_dv_rows_for`)."""
-        dvs = _files_dv(snap)
+        dvs = snap.files.dv_map()
         return self._dv_rows_for(table, [(p, dvs.get(p)) for p in rels])
 
     def _dv_rows_for(self, table: str,
@@ -2573,8 +2475,7 @@ class TxLogDataSource(BaseDataSource):
         # in-commit timestamp (Delta ICT): commit time rides IN the
         # commit payload, clamped monotone against the previous
         # version, so timestamp time travel survives file copies,
-        # restores from backup, and clock skew — mtime is only the
-        # fallback for pre-ICT commits
+        # restores from backup, and clock skew
         import time
 
         ts_ms = int(time.time() * 1000)
@@ -2721,15 +2622,12 @@ class TxLogDataSource(BaseDataSource):
                         upto: int | None = None):
         """Replay one piece of checkpoint-carried log state at version
         ``upto`` (default: latest): seed from the newest checkpoint at
-        or below ``upto`` that carries ``ck_key`` (pre-feature
-        checkpoints fall through to a full scan), then ``fold`` every
-        commit line after it. Per-call cost is bounded by
-        CHECKPOINT_INTERVAL, not table age, and because checkpoints
-        carry the state forward it survives commit-file retention
-        (clean_log refreshes its floor checkpoint through
-        :meth:`_write_checkpoint` to retrofit new keys). Shared by txn
-        stamps and COPY INTO ledger refs — add the next carried key
-        here, not as another copy of this loop."""
+        or below ``upto`` (every checkpoint carries ``ck_key``), then
+        ``fold`` every commit line after it. Per-call cost is bounded
+        by CHECKPOINT_INTERVAL, not table age, and because checkpoints
+        carry the state forward it survives commit-file retention.
+        Shared by txn stamps and COPY INTO ledger refs — add the next
+        carried key here, not as another copy of this loop."""
         commits, checkpoints = _list_log(table)
         state = seed(None)
         start = 0
@@ -2737,13 +2635,10 @@ class TxLogDataSource(BaseDataSource):
             c for c in checkpoints
             if upto is None or _version_of(c) <= upto
         ]
-        for ck_name in reversed(usable):
-            with open(os.path.join(_log_path(table), ck_name)) as fh:
-                ck = json.load(fh)
-            if ck_key in ck:
-                state = seed(ck[ck_key])
-                start = _version_of(ck_name) + 1
-                break
+        if usable:
+            with open(os.path.join(_log_path(table), usable[-1])) as fh:
+                state = seed(json.load(fh)[ck_key])
+            start = _version_of(usable[-1]) + 1
         for fname in commits:
             v = _version_of(fname)
             if v < start or (upto is not None and v > upto):
@@ -2869,11 +2764,8 @@ class TxLogDataSource(BaseDataSource):
         self._write_checkpoint(table, version)
 
     def _write_checkpoint(self, table: str, version: int) -> None:
-        """Write (or refresh) the checkpoint at ``version`` from the
-        replayed log — derived state, so overwriting is idempotent.
-        clean_log refreshes its floor checkpoint through this before
-        pruning, which retrofits keys older checkpoints predate
-        (``txns``, ``copyLedgers``) while their commits still exist."""
+        """Write the checkpoint at ``version`` from the replayed log —
+        derived state, so overwriting is idempotent."""
         snap = resolve_snapshot(table, version)
         ck = {
             "version": version,
@@ -2885,29 +2777,21 @@ class TxLogDataSource(BaseDataSource):
             "copyLedgers": self._copy_ledger_refs(table, upto=version),
         }
         files = snap.files
-        n_live = len(files)  # path-column read on a lazy set, no JSON
-        if n_live >= CHECKPOINT_PARQUET_MIN:
+        if len(files) >= CHECKPOINT_PARQUET_MIN:
             # large live set: the adds go to a parquet sidecar (see
-            # LazyAdds). Sidecar lands BEFORE the JSON that
-            # references it, so a reader can never see a dangling
-            # reference; an orphan from a failed JSON publish is inert
-            # and reaped by clean_log.
+            # LazyAdds) by INCREMENTAL columnar refresh — previous
+            # sidecar rows copy through arrow-side (kill-set
+            # filtered), only delta-layer adds serialize fresh, so the
+            # checkpoint on a million-file table never json.loads its
+            # live set. Sidecar lands BEFORE the JSON that references
+            # it, so a reader can never see a dangling reference; an
+            # orphan from a failed JSON publish is inert and reaped by
+            # clean_log.
             side = f"{version:020d}.checkpoint.adds.parquet"
-            dest = os.path.join(_log_path(table), side)
-            if isinstance(files, LazyAdds) and files.typed():
-                # INCREMENTAL columnar refresh: previous sidecar rows
-                # copy through arrow-side (kill-set filtered), only
-                # tail delta adds serialize fresh — the checkpoint on
-                # a million-file table never json.loads its live set
-                ck["addCount"] = _refresh_typed_sidecar(
-                    files, snap.schema, snap.partition_cols, dest
-                )
-            else:
-                adds = [files[p] for p in sorted(files)]
-                _publish_adds_sidecar(
-                    dest, adds, snap.schema, snap.partition_cols
-                )
-                ck["addCount"] = len(adds)
+            ck["addCount"] = _refresh_typed_sidecar(
+                files, snap.schema, snap.partition_cols,
+                os.path.join(_log_path(table), side),
+            )
             ck["addsParquet"] = side
         else:
             ck["adds"] = [files[p] for p in sorted(files)]
@@ -5211,9 +5095,8 @@ class TxLogDataSource(BaseDataSource):
         ``_change_data`` the same way), and each cdc action records
         its physical-keyed ``partitionValues`` so a partition-scoped
         feed consumer reads only its partitions' change files. Readers
-        re-attach the values (the column is absent from the file);
-        actions without the key (pre-partitioning history) read the
-        old full-column layout unchanged."""
+        re-attach the values (the column is absent from the file); an
+        unpartitioned table records ``{}``."""
         phys = _physical_map(schema)
         if any(phys.get(c, c) != c for c in df.columns):
             df = df.select(
@@ -5261,12 +5144,8 @@ class TxLogDataSource(BaseDataSource):
         actions: list[dict] = []
         for p, n in sorted(counts.items()):
             add = snap.files[p]
-            total = add.get("numRecords")
-            if total is None:  # foreign add without footer stats
-                total, _ = self._footer_stats(os.path.join(table, p))
-            total = int(total)
             actions.append({"remove": {"path": p}})
-            if n < total:
+            if n < int(add["numRecords"]):
                 actions.append({"add": {
                     **self._as_data_change(add),
                     "dv": {"path": rel_dv, "cardinality": int(n)},
@@ -5567,8 +5446,8 @@ class TxLogDataSource(BaseDataSource):
         if snap is None:
             return
         stamp = self._cluster_stamp(cluster_by, strategy)
-        stamps = _files_field(snap, "clustered_by", "clusteredBy",
-                              decode=True)
+        stamps = snap.files.field_map("clustered_by", "clusteredBy",
+                                      decode=True)
         if not snap.partition_cols:
             debt = sum(1 for s in stamps.values() if s != stamp)
             if debt < self.AUTO_CLUSTER_MIN_FILES:
@@ -5585,7 +5464,7 @@ class TxLogDataSource(BaseDataSource):
             # unstamped: ingest must never trigger an O(table) rewrite.
             pmap = _physical_map(snap.schema)
             pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-            paths, _stats, pvs = _files_meta(snap, {}, pv_phys)
+            paths, _stats, pvs = snap.files.meta({}, pv_phys)
             debt_by_part: dict[tuple, int] = {}
             for i, p in enumerate(paths):
                 if stamps.get(p) == stamp:
@@ -5653,12 +5532,8 @@ class TxLogDataSource(BaseDataSource):
         else:
             in_scope = set(snap.files)
         threshold = int(target_size_mb) << 20
-        sizes = {
-            p: (int(snap.files[p]["size"])
-                if snap.files[p].get("size") is not None
-                else os.path.getsize(os.path.join(table, p)))
-            for p in sorted(in_scope)
-        }  # published add.size when recorded: no per-file stat storm
+        # published add.size: no per-file stat storm
+        sizes = {p: int(snap.files[p]["size"]) for p in sorted(in_scope)}
         import math
 
         if zorder_by:
@@ -5803,13 +5678,13 @@ class TxLogDataSource(BaseDataSource):
             raise DataSourceException(f"txlog table {table!r} does not exist")
         stamp = self._cluster_stamp(cluster_by, strategy)
         if incremental:
-            stamps = _files_field(snap, "clustered_by", "clusteredBy",
-                                  decode=True)
+            stamps = snap.files.field_map("clustered_by", "clusteredBy",
+                                          decode=True)
             scope = sorted(p for p, s in stamps.items() if s != stamp)
             if partition_scope is not None and snap.partition_cols:
                 pmap = _physical_map(snap.schema)
                 pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-                paths, _st, pvs = _files_meta(snap, {}, pv_phys)
+                paths, _st, pvs = snap.files.meta({}, pv_phys)
                 tuple_of = {
                     p: tuple(pvs[c][i] for c in pv_phys)
                     for i, p in enumerate(paths)
@@ -5848,9 +5723,10 @@ class TxLogDataSource(BaseDataSource):
         commit files strictly below it and checkpoints superseded by it
         (only ones older than ``min_age_sec``, the same concurrency
         guard as vacuum). The floor checkpoint carries schema, live
-        files, configuration, and txn stamps, so latest-state reads,
-        exactly-once replay detection, CDF above the floor, and
-        ICT/mtime timestamp travel to surviving versions are all
+        files, configuration, txn stamps, COPY INTO ledger refs and the
+        row-id high-water mark, so it is never rewritten: latest-state
+        reads, exactly-once replay detection, CDF above the floor, and
+        ICT timestamp travel to surviving versions are all
         unaffected. Time travel BELOW the floor raises the ordinary
         version-does-not-exist error — the bounded-history trade Delta
         documents for log retention. Returns the deleted file names."""
@@ -5887,21 +5763,6 @@ class TxLogDataSource(BaseDataSource):
             self._reap_log_orphans(table, now, min_age_sec, deleted)
             return deleted
         floor = _version_of(usable[-1])
-        # refresh the floor checkpoint from the still-complete log
-        # BEFORE pruning: retrofits replay-carried keys the stored
-        # checkpoint may predate (txns, copyLedgers) — without this a
-        # pre-feature floor would silently lose exactly-once stamps or
-        # COPY INTO idempotency below it. Skipped when the stored
-        # floor already carries every current key: a scheduled
-        # clean_log on a huge table must not re-serialize a
-        # multi-hundred-MB adds sidecar on every run.
-        with open(os.path.join(_log_path(table), usable[-1])) as fh:
-            stored = json.load(fh)
-        carried = ("txns", "copyLedgers", "rowIdHighWaterMark")
-        if (any(k not in stored for k in carried)
-                or ("adds" not in stored and "addsParquet" not in stored)
-                or self._sidecar_needs_upgrade(table, stored)):
-            self._write_checkpoint(table, floor)
         for fname in commits + checkpoints:
             v = _version_of(fname)
             if v >= floor:
@@ -5913,24 +5774,6 @@ class TxLogDataSource(BaseDataSource):
             deleted.append(fname)
         self._reap_log_orphans(table, now, min_age_sec, deleted)
         return deleted
-
-    @staticmethod
-    def _sidecar_needs_upgrade(table: str, stored: dict) -> bool:
-        """True when the floor checkpoint references a PRE-TYPED adds
-        sidecar (add_json only, no ``path``/``min::``/``max::``
-        columns) — the floor refresh then rewrites it in the typed
-        layout so the columnar metadata plane covers old tables too.
-        Footer-only read; a missing sidecar is left for the ordinary
-        resolution error to surface."""
-        if "addsParquet" not in stored:
-            return False
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        p = os.path.join(_log_path(table), stored["addsParquet"])
-        try:
-            return "path" not in pq.ParquetFile(p).schema_arrow.names
-        except OSError:
-            return False
 
     def _reap_log_orphans(self, table: str, now: float,
                           min_age_sec: float, deleted: list[str]) -> None:
@@ -6284,7 +6127,7 @@ class TxLogDataSource(BaseDataSource):
                 elif "cdc" in action:
                     cdc_paths.append(
                         (action["cdc"]["path"],
-                         action["cdc"].get("partitionValues") or {})
+                         action["cdc"]["partitionValues"])
                     )
             if cdc_paths:
                 # Delta's rule: a commit carrying cdc actions is served
@@ -6296,9 +6139,7 @@ class TxLogDataSource(BaseDataSource):
                 # hive-partitioned like the table (their partition
                 # columns live in the action's partitionValues, not in
                 # the file): group per partition tuple, re-attach the
-                # constants. Actions without partitionValues are the
-                # pre-partitioning full-column layout — the explicit
-                # schema read finds every column in the file.
+                # constants.
                 by_pv: dict[tuple, list[str]] = {}
                 for p, pv in cdc_paths:
                     by_pv.setdefault(tuple(sorted(pv.items())), []).append(p)
@@ -6356,7 +6197,9 @@ class TxLogDataSource(BaseDataSource):
                 def side(entries: list[dict], marker: str) -> DataFrame:
                     s = Snapshot(
                         v, sch.schema_json, sch.partition_cols,
-                        {e["path"]: e for e in entries},
+                        LazyAdds(table, [("delta", {
+                            e["path"]: e for e in entries
+                        })]),
                         sch.configuration,
                     )
                     return (
@@ -6487,8 +6330,8 @@ class TxLogDataSource(BaseDataSource):
 
     def restore_to_timestamp(self, ref: TableRef, ts) -> int:
         """RESTORE TABLE ... TO TIMESTAMP AS OF — resolves the target
-        version by in-commit timestamp (mtime fallback, the same rule
-        as read-side time travel) and delegates to :meth:`restore`."""
+        version by in-commit timestamp (the same rule as read-side
+        time travel) and delegates to :meth:`restore`."""
         table = self._table_path(ref)
         if resolve_snapshot(table) is None:
             raise DataSourceException(f"txlog table {table!r} does not exist")
@@ -6571,20 +6414,16 @@ class TxLogDataSource(BaseDataSource):
         add-actions' ``numRecords`` (every add carries its footer row
         count). O(log), zero data bytes read: Delta's count-from-stats
         optimization surfaced as an explicit API (``SELECT COUNT(*)``
-        through the generic reader would still scan). Files whose add
-        action predates the stats field (foreign logs) fall back to a
-        single parquet-footer read each — still no data pages."""
+        through the generic reader would still scan)."""
         table = self._table_path(ref)
         snap = resolve_snapshot(table, version)
         if snap is None:
             raise DataSourceException(f"txlog table {table!r} does not exist")
-        total = 0
-        for rel, add in snap.files.items():
-            n = add.get("numRecords")
-            if n is None:
-                n, _ = self._footer_stats(os.path.join(table, rel))
-            total += int(n) - int((add.get("dv") or {}).get("cardinality", 0))
-        return total
+        return sum(
+            int(add["numRecords"])
+            - int((add.get("dv") or {}).get("cardinality", 0))
+            for add in snap.files.values()
+        )
 
     def partition_counts(self, ref: TableRef,
                          version: int | None = None) -> list[dict]:
@@ -6598,7 +6437,7 @@ class TxLogDataSource(BaseDataSource):
         acc: dict[tuple, dict] = {}
         # pv keys are PHYSICAL (rename-stable); present them logical
         back = {_physical_name(f): f.name for f in snap.schema.fields}
-        for rel, add in snap.files.items():
+        for add in snap.files.values():
             pv = {
                 back.get(k, k): v
                 for k, v in (add.get("partitionValues") or {}).items()
@@ -6606,11 +6445,9 @@ class TxLogDataSource(BaseDataSource):
             key = tuple(sorted(pv.items()))
             slot = acc.setdefault(key, {"n_files": 0, "n_rows": 0})
             slot["n_files"] += 1
-            n = add.get("numRecords")
-            if n is None:
-                n, _ = self._footer_stats(os.path.join(table, rel))
             slot["n_rows"] += (
-                int(n) - int((add.get("dv") or {}).get("cardinality", 0))
+                int(add["numRecords"])
+                - int((add.get("dv") or {}).get("cardinality", 0))
             )
         return [
             {**dict(key), "n_files": v["n_files"], "n_rows": v["n_rows"]}
@@ -6639,8 +6476,8 @@ class TxLogDataSource(BaseDataSource):
 
         Returns the clone's committed version (0 — metaData + adds in
         one atomic commit). ``timestamp`` addresses the source by
-        commit time instead of version (ICT resolution, mtime
-        fallback — the TIMESTAMP AS OF clone flavor)."""
+        commit time instead of version (ICT resolution — the
+        TIMESTAMP AS OF clone flavor)."""
         src = self._table_path(src_ref)
         if timestamp is not None:
             if version is not None:
@@ -6732,8 +6569,8 @@ class TxLogDataSource(BaseDataSource):
     def describe_detail(self, ref: TableRef) -> dict:
         """DESCRIBE DETAIL: current version, schema, partitioning, file
         count, exact row count (metadata), and live-file bytes — read
-        from the adds' published ``size`` field (zero I/O; stat() only
-        for pre-size adds). Every field comes from ONE snapshot
+        from the adds' published ``size`` field (zero I/O). Every field
+        comes from ONE snapshot
         resolve, so the report is internally consistent under
         concurrent commits."""
         table = self._table_path(ref)
@@ -6742,18 +6579,10 @@ class TxLogDataSource(BaseDataSource):
             raise DataSourceException(f"txlog table {table!r} does not exist")
         size = 0
         n_rows = 0
-        for rel, add in snap.files.items():
-            n = add.get("numRecords")
-            if n is None:
-                n, _ = self._footer_stats(os.path.join(table, rel))
-            n_rows += int(n) - int((add.get("dv") or {}).get("cardinality", 0))
-            if add.get("size") is not None:
-                size += int(add["size"])  # recorded at publish: no stat
-            else:
-                try:
-                    size += os.path.getsize(os.path.join(table, rel))
-                except OSError:
-                    pass  # vacuumed out from under: size is best-effort
+        for add in snap.files.values():
+            n_rows += (int(add["numRecords"])
+                       - int((add.get("dv") or {}).get("cardinality", 0)))
+            size += int(add["size"])  # recorded at publish: no stat
         return {
             "path": table,
             "version": snap.version,
@@ -6766,8 +6595,7 @@ class TxLogDataSource(BaseDataSource):
 
     def history(self, ref: TableRef) -> list[dict]:
         """(version, operation, timestamp) for every commit — DESCRIBE
-        HISTORY. ``timestamp`` is the in-commit epoch-ms value (None
-        for pre-ICT commits)."""
+        HISTORY. ``timestamp`` is the in-commit epoch-ms value."""
         table = self._table_path(ref)
         commits, _ = _list_log(table)
         out = []
@@ -6835,7 +6663,7 @@ class TxLogDataSource(BaseDataSource):
         if kind is None or isinstance(lo, bool):
             return sorted(snap.files)  # un-prunable kind: all candidates
         pkey = _physical_map(snap.schema).get(key, key)  # stats keys are PHYSICAL
-        paths, stats, _ = _files_meta(snap, {pkey: kind}, [])
+        paths, stats, _ = snap.files.meta({pkey: kind}, [])
         mins, maxs = stats[pkey]
         fmin, vmin = _np_bounds(mins, kind)
         fmax, vmax = _np_bounds(maxs, kind)
@@ -7083,7 +6911,7 @@ class TxLogDataSource(BaseDataSource):
             disjuncts = []
         stat_kinds = {c: k for d in disjuncts for c, k, _, _ in d}
         pv_phys = [pmap.get(c, c) for c in snap.partition_cols]
-        paths, stats, pvs = _files_meta(snap, stat_kinds, pv_phys)
+        paths, stats, pvs = snap.files.meta(stat_kinds, pv_phys)
         keep = np.ones(len(paths), dtype=bool)
         if disjuncts:
             excl_all = np.ones(len(paths), dtype=bool)

@@ -278,7 +278,7 @@ def _cdf_partitions(table: str, base_v: int,
             elif "cdc" in action:
                 cdc_paths.append(
                     (action["cdc"]["path"],
-                     action["cdc"].get("partitionValues") or {})
+                     action["cdc"]["partitionValues"])
                 )
         if cdc_paths:
             # a commit carrying cdc actions is served FROM them (the
@@ -552,15 +552,13 @@ class TxLogStreamReader(DataSourceStreamReader):
         paths the SAME commit removes (deletion-vector re-points /
         metadata rewrites) and dataChange=false maintenance — those
         carry no new rows, and counting them would shrink effective
-        batch sizes. Cached: the per-version log is immutable. Adds
-        predating the size field fall back to one driver stat call,
-        amortized by the same cache."""
+        batch sizes. Cached: the per-version log is immutable."""
         from x_spark.sources.txlog import iter_commit_actions
 
         cached = self._add_counts.get(v)
         if cached is not None:
             return cached
-        added: dict[str, int | None] = {}
+        added: dict[str, int] = {}
         removed: set[str] = set()
         # iter_commit_actions expands addBatch parquet references
         # (large commits) back into their add actions
@@ -568,19 +566,11 @@ class TxLogStreamReader(DataSourceStreamReader):
             if "add" in action:
                 if action["add"].get("dataChange", True):
                     added[action["add"]["path"]] = \
-                        action["add"].get("size")
+                        int(action["add"]["size"])
             elif "remove" in action:
                 removed.add(action["remove"]["path"])
-        live = {p: sz for p, sz in added.items() if p not in removed}
-        total = 0
-        for p, sz in live.items():
-            if sz is None:
-                try:
-                    sz = os.path.getsize(os.path.join(self.table, p))
-                except OSError:
-                    sz = 0
-            total += int(sz)
-        out = (len(live), total)
+        live = [sz for p, sz in added.items() if p not in removed]
+        out = (len(live), sum(live))
         self._add_counts[v] = out
         return out
 
