@@ -544,3 +544,62 @@ def test_update_sql_dispatch_with_nested_commas(spark, ds, tmp_path):
         assert got == {1: ("x", 1), 2: ("y,z", 20)}
     finally:
         ds.drop_table(ref)
+
+
+def test_dv_paths_survive_url_encoded_file_paths(spark, ds, tmp_path):
+    """``_metadata.file_path`` is a URI: a space in the table path or
+    in a partition value arrives percent-encoded, while a ``+`` stays
+    literal. DV delete, update and merge key masks on the decoded rel
+    path, so rows read back exactly and the change feed sees the
+    masked rows."""
+    ref = TableRef(path=str(tmp_path / "sp test" / "t"))
+    parts = ["a b", "c+d", "e"]
+    rows = [(i, parts[i % 3], i * 10) for i in range(30)]
+    df = spark.createDataFrame(rows, "pk int, part string, v int")
+    ds.create(ref, df.schema, partition_by=["part"])
+    ds.append(df, ref)
+    ds.set_properties(ref, {DV_ENABLE_KEY: "true"})
+    v0 = resolve_snapshot(ref.path).version
+    want = {pk: (part, v) for pk, part, v in rows}
+
+    def check():
+        got = sorted(map(tuple, ds.read(ref).select("pk", "part", "v")
+                         .collect()))
+        assert got == sorted((pk, p, v) for pk, (p, v) in want.items())
+
+    ds.delete(ref, "pk % 4 = 0")
+    masked = sorted((pk, *want.pop(pk)) for pk in list(want) if pk % 4 == 0)
+    check()
+    # every partition, "+" and space ones included, holds a masked file
+    assert {a["partitionValues"]["part"]
+            for a in resolve_snapshot(ref.path).files.values()
+            if a.get("dv")} == set(parts)
+    ch = ds.changes(ref, v0, v0 + 1)
+    assert sorted((r.pk, r.part, r.v, r._change_type) for r in ch.collect()) \
+        == [(*m, "delete") for m in masked]
+
+    ds.update(ref, {"v": "v + 1"}, "pk % 4 = 1")
+    for pk in [k for k in want if k % 4 == 1]:
+        want[pk] = (want[pk][0], want[pk][1] + 1)
+    check()
+
+    src = spark.createDataFrame(
+        [(1, "c+d", -1), (3, "a b", -3), (100, "c+d", -100)],
+        "pk int, part string, v int",
+    )
+    ds.merge(src, ref, MergeSpec(["pk"], ["part", "v"],
+                                 insert_when_not_matched=True))
+    want.update({1: ("c+d", -1), 3: ("a b", -3), 100: ("c+d", -100)})
+    check()
+
+    # the feed over all three commits nets to the state difference
+    net: dict[tuple, int] = {}
+    for r in ds.changes(ref, v0).collect():
+        sign = 1 if r._change_type in ("insert", "update_postimage") else -1
+        key = (r.pk, r.part, r.v)
+        net[key] = net.get(key, 0) + sign
+    expect = {(pk, p, v): 1 for pk, (p, v) in want.items()}
+    for pk, p, v in rows:
+        expect[(pk, p, v)] = expect.get((pk, p, v), 0) - 1
+    assert {k: n for k, n in net.items() if n} == \
+        {k: n for k, n in expect.items() if n}

@@ -10,6 +10,7 @@ concurrency, vacuum, and log checkpoints.
 
 import json
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from x_spark.sources import init_datasource
 from x_spark.sources.base import MergeSpec, TableRef
 from x_spark.sources.txlog import (
     CHECKPOINT_INTERVAL,
+    DV_ENABLE_KEY,
     ConcurrentWriteException,
     _list_log,
     resolve_snapshot,
@@ -2058,3 +2060,94 @@ def test_every_writer_emits_current_log_format(spark, ds, tmp_path,
                 seen["ck_sidecar"] += 1
                 check_sidecar(os.path.join(log, ck["addsParquet"]))
     assert all(seen.values()), f"a log shape was never exercised: {seen}"
+
+
+# -- log-served scans ---------------------------------------------------------
+DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _many_file_table(spark, ds, path, dv=False):
+    """40 files of 5 consecutive pks at v1 (``spark.range`` keeps its
+    40 slices as the write's partitions), one more file at v2; with
+    ``dv`` a delete then masks one row in each of the 40."""
+    ref = TableRef(path=path)
+    ds.append(spark.range(0, 200, 1, 40)
+              .selectExpr("cast(id as int) pk", "cast(id * 10 as int) v"), ref)
+    ds.append(spark.createDataFrame([(200, 2000)], "pk int, v int")
+              .coalesce(1), ref)
+    assert len(resolve_snapshot(path).files) == 41
+    if dv:
+        ds.set_properties(ref, {DV_ENABLE_KEY: "true"})
+        ds.delete(ref, "pk % 5 = 0")
+        assert sum(bool(a.get("dv"))
+                   for a in resolve_snapshot(path).files.values()) == 40
+    return ref
+
+
+def test_scan_of_many_files_submits_no_spark_job(spark, ds, tmp_path):
+    """Every read of log-named files takes its file list from the log:
+    building the DataFrame submits no Spark job (no distributed listing
+    past the discovery threshold, no schema inference), and the
+    session's threshold is left exactly as the caller set it."""
+    ref = _many_file_table(spark, ds, str(tmp_path / "t"))
+    dv_ref = _many_file_table(spark, ds, str(tmp_path / "dv"), dv=True)
+    sc = spark.sparkContext
+    builds = {
+        "read": (lambda: ds.read(ref), 201),
+        "versionAsOf": (lambda: ds.read(
+            TableRef(path=ref.path, options={"versionAsOf": "1"})), 200),
+        "changes": (lambda: ds.changes(ref, 0), 201),
+        "dv_read": (lambda: ds.read(dv_ref), 160),
+    }
+    try:
+        for prior in (None, "7", "1000"):
+            if prior is None:
+                spark.conf.unset(DISCOVERY_KEY)
+            else:
+                spark.conf.set(DISCOVERY_KEY, prior)
+            for name, (build, n) in builds.items():
+                group = f"scan-{name}-{prior}"
+                sc.setJobGroup(group, group)
+                df = build()
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+                assert list(jobs) == [], (name, prior)
+                assert spark.conf.get(DISCOVERY_KEY, None) == prior, name
+                assert df.count() == n, (name, prior)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.unset(DISCOVERY_KEY)
+
+
+def test_concurrent_scans_restore_the_callers_threshold(spark, ds, tmp_path):
+    """Four threads building scans of 40-file tables at once neither
+    leak a raised threshold into the session nor lose a read."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    ref = _many_file_table(spark, ds, str(tmp_path / "t"))
+    dv_ref = _many_file_table(spark, ds, str(tmp_path / "dv"), dv=True)
+    reads = [
+        (ref, 201),
+        (TableRef(path=ref.path, options={"versionAsOf": "1"}), 200),
+        (dv_ref, 160),
+    ]
+
+    def worker(i):
+        # build all 20 first so the builds of the 4 threads overlap
+        frames = [(ds.read(r), n) for r, n in
+                  (reads[(i + k) % len(reads)] for k in range(20))]
+        return [(df.count(), n) for df, n in frames]
+
+    spark.conf.set(DISCOVERY_KEY, "9")
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            results = [c for part in pool.map(worker, range(4), timeout=600)
+                       for c in part]
+        assert spark.conf.get(DISCOVERY_KEY, None) == "9"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.unset(DISCOVERY_KEY)
+    assert len(results) == 80
+    assert all(got == want for got, want in results), results

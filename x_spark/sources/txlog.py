@@ -46,6 +46,7 @@ import json
 import os
 import re
 import shutil
+import threading
 import uuid
 from collections.abc import Mapping
 
@@ -89,6 +90,7 @@ CLUSTER_STRATEGY_KEY = "clusterBy.strategy"
 # column. The dv field rides ON the add action, so checkpoints, RESTORE,
 # CLONE and time travel carry mask state with zero extra machinery.
 DV_ENABLE_KEY = "enableDeletionVectors"
+DV_SIDECAR_SCHEMA = "file_name string, row_index bigint"
 ROW_TRACKING_KEY = "enableRowTracking"
 # physical carry columns a preserving rewrite materializes into its
 # parquet files: a row's stable id, and its last-modified commit
@@ -130,6 +132,11 @@ CDC_DIR = "_change_data"
 # enable mapping use identity names and pay nothing.
 COLUMN_MAPPING_KEY = "columnMapping.mode"
 PHYSICAL_NAME_KEY = "x_spark.columnMapping.physicalName"
+
+# raised per scan by ``_scan_files``; the lock keeps concurrent scans
+# from restoring each other's raised value as "the caller's"
+_DISCOVERY_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_DISCOVERY_LOCK = threading.Lock()
 
 
 def _physical_name(field: StructField) -> str:
@@ -2211,10 +2218,55 @@ class TxLogDataSource(BaseDataSource):
             )
         return best
 
+    def _scan_files(self, schema: StructType | str, table: str,
+                    rels: list[str], base_path: bool = True) -> DataFrame:
+        """The one scan of files the log names: parquet at ``rels``
+        (relative to ``table``; absolute paths pass through) read with
+        an explicit ``schema`` — the engine wrote these files, so no
+        schema-inference job. ``base_path`` keeps hive-style partition
+        columns.
+
+        Spark's file index stats explicit paths when it is built, and
+        past ``parallelPartitionDiscovery.threshold`` paths it does so
+        with a distributed job of one task per file. The threshold is
+        raised to ``len(rels)`` for the build only — never lowered, and
+        the caller's value (or its absence) restored — so the listing
+        is one driver-side pass the scan's execution reuses; Delta's
+        file index likewise takes its file list from the log."""
+        reader = self.spark.read.schema(schema)
+        if base_path:
+            reader = reader.option("basePath", table)
+        paths = [os.path.join(table, p) for p in rels]
+        conf = self.spark.conf
+        with _DISCOVERY_LOCK:
+            prev = conf.get(_DISCOVERY_KEY, None)
+            if len(paths) <= int(prev or conf.get(_DISCOVERY_KEY)):
+                return reader.parquet(*paths)
+            conf.set(_DISCOVERY_KEY, str(len(paths)))
+            try:
+                return reader.parquet(*paths)
+            finally:
+                if prev is None:
+                    conf.unset(_DISCOVERY_KEY)
+                else:
+                    conf.set(_DISCOVERY_KEY, prev)
+
+    def _scan_logical(self, schema: StructType, table: str,
+                      rels: list[str], *extra) -> DataFrame:
+        """:meth:`_scan_files` under column mapping: files store
+        physical names, so scan with the physical schema and alias back
+        to the logical ones (identity when mapping is off); ``extra``
+        columns (e.g. ``_metadata`` fields) ride along."""
+        return self._scan_files(_physical_schema(schema), table, rels).select(
+            *[F.col(_physical_name(f)).alias(f.name) for f in schema.fields],
+            *extra,
+        )
+
     def _read_snapshot(self, table: str, snap: Snapshot,
                        paths: list[str] | None = None) -> DataFrame:
         """DataFrame over ``paths`` (default: all live files) of a
-        snapshot. ``basePath`` keeps hive-style partition columns.
+        snapshot, its file list taken from the log (:meth:`_scan_files`
+        — no Spark listing or schema job however many files are live).
 
         Files whose add action carries a deletion vector are read
         through a left-anti join against their mask rows (merge-on-
@@ -2229,15 +2281,7 @@ class TxLogDataSource(BaseDataSource):
         plain = [p for p in rel if not dvs.get(p)]
         parts: list[DataFrame] = []
         if plain:
-            # column mapping: files store physical names; scan with the
-            # physical schema, alias back to logical (identity when off)
-            parts.append(
-                self.spark.read.schema(_physical_schema(snap.schema))
-                .option("basePath", table)
-                .parquet(*[os.path.join(table, p) for p in plain])
-                .select(*[F.col(_physical_name(f)).alias(f.name)
-                          for f in snap.schema.fields])
-            )
+            parts.append(self._scan_logical(snap.schema, table, plain))
         if masked:
             df = self._read_files_with_meta(table, snap.schema, masked)
             mask = self._dv_rows(table, snap, masked)
@@ -2255,14 +2299,8 @@ class TxLogDataSource(BaseDataSource):
         ``__fn`` (the file's REL PATH — the table-wide identity key;
         basenames can collide in adopted layouts) and ``__ri``
         (parquet ``_metadata.row_index``)."""
-        df = (
-            self.spark.read.schema(_physical_schema(schema))
-            .option("basePath", table)
-            .parquet(*[os.path.join(table, p) for p in rels])
-        )
-        return df.select(
-            *[F.col(_physical_name(f)).alias(f.name)
-              for f in schema.fields],
+        return self._scan_logical(
+            schema, table, rels,
             self._rel_path_col(table).alias("__fn"),
             F.col("_metadata.row_index").alias("__ri"),
         )
@@ -2290,7 +2328,8 @@ class TxLogDataSource(BaseDataSource):
         parts = []
         for dv_path, names in sorted(by_dv.items()):
             parts.append(
-                self.spark.read.parquet(os.path.join(table, dv_path))
+                self.spark.read.schema(DV_SIDECAR_SCHEMA)
+                .parquet(os.path.join(table, dv_path))
                 .filter(F.col("file_name").isin(names))
                 .select(
                     F.col("file_name").alias("__fn"),
@@ -2313,10 +2352,16 @@ class TxLogDataSource(BaseDataSource):
         adopted layouts (CONVERT TO TXLOG of a Spark partitionBy
         write) legitimately repeat basenames across partition dirs.
         Handles both ``file:/abs`` and ``file:///abs`` renderings;
-        the table path is regex-quoted."""
+        the table path is regex-quoted. ``file_path`` is a URI, so it
+        is decoded first (a space in the table path or a partition
+        value arrives as ``%20``); a literal ``+``, which Hadoop leaves
+        unencoded and ``url_decode`` would turn into a space, is
+        protected as ``%2B``."""
         prefix = "^file:/*\\Q" + os.path.abspath(table).lstrip("/") \
             + "\\E/"
-        return F.regexp_replace(F.col("_metadata.file_path"), prefix, "")
+        path = F.url_decode(
+            F.regexp_replace(F.col("_metadata.file_path"), "\\+", "%2B"))
+        return F.regexp_replace(path, prefix, "")
 
     @staticmethod
     def _row_tracking_on(configuration: dict[str, str]) -> bool:
@@ -2345,9 +2390,7 @@ class TxLogDataSource(BaseDataSource):
         pschema = (_physical_schema(snap.schema)
                    .add(ROW_ID_COL, "long").add(ROW_RCV_COL, "long"))
         raw = (
-            self.spark.read.schema(pschema)
-            .option("basePath", table)
-            .parquet(*[os.path.join(table, p) for p in rel])
+            self._scan_files(pschema, table, rel)
             .select(
                 *[F.col(_physical_name(f)).alias(f.name)
                   for f in snap.schema.fields],
@@ -2748,7 +2791,10 @@ class TxLogDataSource(BaseDataSource):
         disc = self.spark.createDataFrame(
             [(t[0],) for t in discovered], "path string"
         )
-        led = self.spark.read.parquet(*paths).select("path")
+        led = self._scan_files(
+            "path string, size bigint, mtime_ms bigint", table, paths,
+            base_path=False,
+        ).select("path")
         # left-anti with the huge ledger on the RIGHT: Spark shuffles
         # both sides on path (never broadcasts the ledger); the result
         # is bounded by the discovered batch
@@ -5063,7 +5109,8 @@ class TxLogDataSource(BaseDataSource):
             return rel, {}  # nothing matched: no sidecar, no re-points
         counts = {
             r["file_name"]: r["n"]
-            for r in self.spark.read.parquet(staging)
+            for r in self.spark.read.schema(DV_SIDECAR_SCHEMA)
+            .parquet(staging)
             .groupBy("file_name").agg(F.count("*").alias("n")).collect()
         }
         shutil.move(staging, os.path.join(table, rel))
@@ -6150,9 +6197,8 @@ class TxLogDataSource(BaseDataSource):
                     present = StructType(
                         [f for f in pschema.fields if f.name not in pv]
                     ).add("_change_type", "string")
-                    df = (self.spark.read.schema(present)
-                          .parquet(*[os.path.join(table, p)
-                                     for p in paths]))
+                    df = self._scan_files(present, table, paths,
+                                          base_path=False)
                     for pname, val in sorted(pv.items()):
                         if pname in ptypes:
                             df = df.withColumn(
@@ -6238,15 +6284,8 @@ class TxLogDataSource(BaseDataSource):
                 plain = [e["path"] for e in entries if not e.get("dv")]
                 masked = [e for e in entries if e.get("dv")]
                 if plain:
-                    collect(
-                        self.spark.read
-                        .schema(_physical_schema(sch.schema))
-                        .option("basePath", table)
-                        .parquet(*[os.path.join(table, p) for p in plain])
-                        .select(*[F.col(_physical_name(f)).alias(f.name)
-                                  for f in sch.schema.fields]),
-                        kind, v,
-                    )
+                    collect(self._scan_logical(sch.schema, table, plain),
+                            kind, v)
                 if masked:
                     rows = self._read_files_with_meta(
                         table, sch.schema, [e["path"] for e in masked]
@@ -6268,7 +6307,9 @@ class TxLogDataSource(BaseDataSource):
                     new_dv["path"] if new_dv else None,
                 )
                 groups.setdefault(key, []).append(p)
-            for (old_dir, new_dir), paths in sorted(groups.items()):
+            # key=str: a commit can re-point unmasked (None) and masked
+            # files at once, and None does not order against a str
+            for (old_dir, new_dir), paths in sorted(groups.items(), key=str):
                 old_mask = self._dv_rows_for(
                     table,
                     [(p, {"path": old_dir} if old_dir else None)
